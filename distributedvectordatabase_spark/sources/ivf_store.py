@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -29,7 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from distributedvectordatabase_spark.sources.tombstones import (
+    GEN_COL,
+    Generations,
     atomic_dump_json,
+    delete_where,
     locked_writer,
 )
 
@@ -53,15 +57,12 @@ class IVFStore:
         meta_cols: tuple | None = None,
     ):
         self.path = path
+        self._gens = Generations(path, "_centroids.json", id_col=id_col)
         # reopening a built store: the persisted centroid sidecar's
         # n_cells / meta_cols are authoritative (same reopen contract
         # as VectorStore/_lsh.json); an explicit argument wins for
         # builds
-        side: dict = {}
-        cpath = os.path.join(path, "_centroids.json")
-        if os.path.exists(cpath):
-            with open(cpath) as f:
-                side = json.load(f)
+        side = self._gens.load()
         self.n_cells = int(side["n_cells"]) if n_cells is None and side else (n_cells or 16)
         self.meta_cols = (
             tuple(side.get("meta_cols", ())) if meta_cols is None else tuple(meta_cols)
@@ -72,37 +73,13 @@ class IVFStore:
 
     @property
     def _centroid_path(self) -> str:
-        return os.path.join(self.path, "_centroids.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _gen(self) -> int:
-        """Last persisted (committed) write/delete generation (see
-        sources/tombstones.py for the ordering contract)."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return int(json.load(f).get("gen", 0))
-        return 0
-
-    def _aborted_gens(self) -> tuple:
-        """Gens burned by crashed appends (tombstones.heal_pending) —
-        their orphan rows are filtered from every read and reclaimed
-        physically by compact()."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return tuple(json.load(f).get("aborted_gens", ()))
-        return ()
+        return self._gens.sidecar
 
     def ingest_batch(self) -> int:
         """Last streaming batch id whose append COMMITTED (recorded by
         the same sidecar dump that bumps gen — stream_ivf_ingest's
         exactly-once marker). -1 if the store never streamed."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return int(json.load(f).get("ingest_batch", -1))
-        return -1
+        return self._gens.ingest_batch()
 
     # underscore-prefixed entries are invisible to spark.read.parquet
     # on self.path, so the compressed table and its codebook can live
@@ -178,18 +155,18 @@ class IVFStore:
                 assigned, centers, float(split_threshold), int(max_split_rounds)
             )
             self.n_cells = len(centers)
-        assigned = assigned.withColumn("_gen", F.lit(1))
         # the static overwrite drops the whole store dir, tombstones and
         # sidecars included — a rebuild starts a fresh delete history
-        assigned.write.mode("overwrite").partitionBy("cell_id").parquet(self.path)
-        radii = self._cell_radii_of(
-            df.sparkSession.read.parquet(self.path), np.array(centers, dtype=np.float64)
-        )
-        atomic_dump_json(
-            self._centroid_path,
-            {"n_cells": self.n_cells, "seed": self.seed, "centers": centers,
-             "gen": 1, "meta_cols": list(self.meta_cols), "radii": radii},
-        )
+        with self._gens.build() as (gen, side):
+            assigned.withColumn(GEN_COL, F.lit(gen)).write.mode(
+                "overwrite"
+            ).partitionBy("cell_id").parquet(self.path)
+            radii = self._cell_radii_of(
+                df.sparkSession.read.parquet(self.path),
+                np.array(centers, dtype=np.float64),
+            )
+            side.update(n_cells=self.n_cells, seed=self.seed, centers=centers,
+                        meta_cols=list(self.meta_cols), radii=radii)
 
     def _cell_radii_of(self, df: DataFrame, C: np.ndarray) -> list:
         """Per-cell radius (max member distance to the cell centroid) —
@@ -220,8 +197,7 @@ class IVFStore:
         existed — filtered search then falls back to fill-to-k).
         Deletes only shrink cells, so a stale radius stays a valid
         upper bound; appends extend it exactly (see append)."""
-        with open(self._centroid_path) as f:
-            side = json.load(f)
+        side = self._gens.load()
         return np.array(side["radii"], dtype=np.float64) if "radii" in side else None
 
     def _split_oversized(
@@ -289,8 +265,7 @@ class IVFStore:
         return assigned, centers
 
     def centroids(self) -> np.ndarray:
-        with open(self._centroid_path) as f:
-            return np.array(json.load(f)["centers"], dtype=np.float64)
+        return np.array(self._gens.load()["centers"], dtype=np.float64)
 
     # -- balance audit -------------------------------------------------------
 
@@ -299,7 +274,7 @@ class IVFStore:
         to IVF cells (one partial+final aggregation, no driver loop)."""
         from distributedvectordatabase_spark.operators.stats import shard_distribution
 
-        return shard_distribution(self._read_live(spark), shard_col="cell_id")
+        return shard_distribution(self._gens.rows(spark), shard_col="cell_id")
 
     def cell_metrics(self, spark: SparkSession) -> DataFrame:
         """One-row balance audit (min/max/avg/CV/imbalance + quality
@@ -307,7 +282,7 @@ class IVFStore:
         scan at scale; rebuild with ``split_threshold`` to bound it."""
         from distributedvectordatabase_spark.operators.stats import distribution_metrics
 
-        return distribution_metrics(self._read_live(spark), shard_col="cell_id")
+        return distribution_metrics(self._gens.rows(spark), shard_col="cell_id")
 
     # -- ingest --------------------------------------------------------------
 
@@ -317,7 +292,7 @@ class IVFStore:
         append — the nearest-centroid math runs as a pandas_udf batch
         matmul, no shuffle beyond the partitioned write.
 
-        Crash-atomic (tombstones.heal_pending two-phase protocol): the
+        Crash-atomic (tombstones.Generations two-phase append): the
         sidecar persists a ``pending_gen`` intent before any data job
         runs, and the final sidecar dump — one file write — commits the
         gen, clears the intent, and (for ``stream_ivf_ingest``) records
@@ -330,11 +305,6 @@ class IVFStore:
         physically."""
         from pyspark.sql.functions import pandas_udf
 
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
         C = self.centroids()
 
         @pandas_udf("int")
@@ -343,106 +313,87 @@ class IVFStore:
             d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             return pd.Series(d2.argmin(axis=1), dtype="int32")
 
-        if os.path.exists(self._centroid_path):
-            raw_cols = df.sparkSession.read.parquet(self.path).columns
-            if "_gen" not in raw_cols:
-                raise ValueError(
-                    "store predates delete support (no _gen column); run "
-                    "compact(spark) once to upgrade before appending"
-                )
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        side = heal_pending(side)
-        gen = next_gen(side)
-        # phase 1: persist the write intent BEFORE any data job — a
-        # crash from here on leaves rows that no read will ever see
-        side["pending_gen"] = gen
-        atomic_dump_json(self._centroid_path, side)
-        out = df.select(self.id_col, self.vec_col, *self.meta_cols).withColumn(
-            "cell_id", nearest_cell(F.col(self.vec_col))
-        ).withColumn("_gen", F.lit(gen))
+        raw_cols = df.sparkSession.read.parquet(self.path).columns
+        if GEN_COL not in raw_cols:
+            raise ValueError(
+                "store predates delete support (no _gen column); run "
+                "compact(spark) once to upgrade before appending"
+            )
         has_pq = os.path.exists(self._pq_codebook_path)
         has_sq = os.path.exists(self._sq_params_path)
         has_bq = os.path.exists(self._bq_params_path)
-        old_radii = self.cell_radii()
-        # pin the assigned batch so the raw write, the codes writes and
-        # the radius aggregation all see the SAME rows — without this,
-        # a non-deterministic input (stream batch, sample, generated
-        # ids) would be recomputed per action and the tables could
-        # silently diverge
-        out = out.cache()
-        if old_radii is not None:
-            # widen the radii BEFORE the data lands: a too-large radius
-            # is merely conservative for the filtered-search bound, but
-            # a crash between the data write and a later radius update
-            # would leave radii too SMALL — and wrongly prune cells
-            # holding the new rows
-            batch = self._cell_radii_of(out, self.centroids())
-            merged = [max(a, b) for a, b in zip(old_radii.tolist(), batch)]
-            with open(self._centroid_path) as f:
-                side = json.load(f)
-            side["radii"] = merged
-            atomic_dump_json(self._centroid_path, side)
-        out.write.mode("append").partitionBy("cell_id").parquet(self.path)
-        # keep the IVFPQ codes table in sync: new rows are encoded with
-        # the EXISTING codebook (standard IVFPQ ingest — codes are only
-        # as good as the codebook, so periodic build_pq refresh is a
-        # caller policy, same as centroid rebuild). A failure in any of
-        # these writes aborts the append BEFORE the phase-2 commit, so
-        # both the raw rows and any partial codes stay invisible
-        # orphans (healed on the next write, reclaimed by compact) —
-        # the two tables can never serve out of sync.
-        try:
-            if has_pq:
-                from distributedvectordatabase_spark.operators.pq import pq_encode
+        # a crash anywhere in the body leaves rows that no read will
+        # ever see; the commit dump after it also stamps the ingest
+        # batch id, so rows become visible and the streaming marker
+        # advances in the same file write
+        with self._gens.append(ingest_batch) as (gen, side):
+            out = df.select(self.id_col, self.vec_col, *self.meta_cols).withColumn(
+                "cell_id", nearest_cell(F.col(self.vec_col))
+            ).withColumn(GEN_COL, F.lit(gen))
+            # pin the assigned batch so the raw write, the codes writes
+            # and the radius aggregation all see the SAME rows — without
+            # this, a non-deterministic input (stream batch, sample,
+            # generated ids) would be recomputed per action and the
+            # tables could silently diverge
+            out = out.cache()
+            try:
+                if "radii" in side:
+                    # widen the radii BEFORE the data lands: a too-large
+                    # radius is merely conservative for the filtered-search
+                    # bound, but a crash between the data write and a later
+                    # radius update would leave radii too SMALL — and
+                    # wrongly prune cells holding the new rows
+                    batch = self._cell_radii_of(out, C)
+                    side["radii"] = [max(a, b) for a, b in zip(side["radii"], batch)]
+                    self._gens.dump(side)
+                out.write.mode("append").partitionBy("cell_id").parquet(self.path)
+                # keep the codes tables in sync: new rows are encoded
+                # with the EXISTING codebook/bounds/bit config (standard
+                # IVFPQ ingest — periodic build_pq refresh is a caller
+                # policy, same as centroid rebuild). A failure in any of
+                # these writes aborts the append BEFORE the commit, so
+                # the raw rows and any partial codes stay invisible
+                # orphans — the tables can never serve out of sync.
+                for codes, path in self._encode_codes(out, C, has_pq, has_sq, has_bq):
+                    codes.write.mode("append").partitionBy("cell_id").parquet(path)
+            finally:
+                out.unpersist()
 
-                (
-                    pq_encode(out, self.pq_codebook(), id_col=self.id_col,
-                              vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
-                              cell_centroids=C if self.pq_is_residual() else None,
-                              rotation=self.pq_rotation())
-                    .write.mode("append")
-                    .partitionBy("cell_id")
-                    .parquet(self._pq_path)
-                )
-            if has_sq:
-                from distributedvectordatabase_spark.operators.sq import sq_encode
+    def _encode_codes(self, rows: DataFrame, C: np.ndarray, pq: bool,
+                      sq: bool, bq: bool) -> list:
+        """(codes df, table path) for each requested compressed leg,
+        encoded from ``rows`` under the legs' persisted params (pure
+        functions of them — the append sync and the rebalancing compact
+        share this)."""
+        out = []
+        if pq:
+            from distributedvectordatabase_spark.operators.pq import pq_encode
 
-                (
-                    sq_encode(out, self.sq_params(), id_col=self.id_col,
-                              vec_col=self.vec_col, keep_cols=("cell_id", "_gen"))
-                    .write.mode("append")
-                    .partitionBy("cell_id")
-                    .parquet(self._sq_path)
-                )
-            if has_bq:
-                from distributedvectordatabase_spark.operators.bq import bq_encode
+            out.append((pq_encode(
+                rows, self.pq_codebook(), id_col=self.id_col,
+                vec_col=self.vec_col, keep_cols=("cell_id", GEN_COL),
+                cell_centroids=C if self.pq_is_residual() else None,
+                rotation=self.pq_rotation(),
+            ), self._pq_path))
+        if sq:
+            from distributedvectordatabase_spark.operators.sq import sq_encode
 
-                # the persisted (n_bits, seed) are authoritative — new
-                # codes must be bit-compatible with the stored ones
-                with open(self._bq_params_path) as f:
-                    bside = json.load(f)
-                (
-                    bq_encode(out, int(bside["dim"]), vec_col=self.vec_col,
-                              n_bits=bside.get("n_bits"),
-                              seed=int(bside.get("seed", 42)))
-                    .select(self.id_col, "bq_code", "cell_id", "_gen")
-                    .write.mode("append")
-                    .partitionBy("cell_id")
-                    .parquet(self._bq_path)
-                )
-        finally:
-            out.unpersist()
-        # phase 2 — THE commit: one sidecar dump bumps gen, clears the
-        # intent, and stamps the ingest batch id; rows become visible
-        # and the streaming marker advances in the same file write
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        side["gen"] = int(gen)
-        side["pending_gen"] = None
-        if ingest_batch is not None:
-            side["ingest_batch"] = int(ingest_batch)
-        atomic_dump_json(self._centroid_path, side)
+            out.append((sq_encode(
+                rows, self.sq_params(), id_col=self.id_col,
+                vec_col=self.vec_col, keep_cols=("cell_id", GEN_COL),
+            ), self._sq_path))
+        if bq:
+            from distributedvectordatabase_spark.operators.bq import bq_encode
+
+            # the persisted (n_bits, seed) are authoritative — new codes
+            # must be bit-compatible with the stored ones
+            with open(self._bq_params_path) as f:
+                bside = json.load(f)
+            out.append((bq_encode(
+                rows, int(bside["dim"]), vec_col=self.vec_col,
+                n_bits=bside.get("n_bits"), seed=int(bside.get("seed", 42)),
+            ).select(self.id_col, "bq_code", "cell_id", GEN_COL), self._bq_path))
+        return out
 
     @locked_writer
     def compact(
@@ -472,112 +423,57 @@ class IVFStore:
         which is what knn_pq decodes against). Full-probe search is
         invariant under any cell layout, so n_probe=n_cells results
         stay pinned equal to exact — asserted in tests."""
-        import shutil
-
-        tmp = self.path.rstrip("/") + "__compacting"
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        live = self._read_live(spark)
-        if split_threshold is not None:
-            live, centers = self._split_oversized(
-                live, side["centers"], float(split_threshold),
-                int(max_split_rounds), keep_cols=("_gen",),
+        with self._gens.compact() as (tmp, side):
+            live = self._gens.rows(spark)
+            if split_threshold is not None:
+                live, centers = self._split_oversized(
+                    live, side["centers"], float(split_threshold),
+                    int(max_split_rounds), keep_cols=(GEN_COL,),
+                )
+                self.n_cells = len(centers)
+                side["centers"] = centers
+                side["n_cells"] = self.n_cells
+            spread = (F.abs(F.hash(self.id_col)) % files_per_cell).alias("_spread")
+            (
+                live
+                .repartition(self.n_cells * files_per_cell, F.col("cell_id"), spread)
+                .write.mode("overwrite")
+                .partitionBy("cell_id")
+                .parquet(tmp)
             )
-            self.n_cells = len(centers)
-            side["centers"] = centers
-            side["n_cells"] = self.n_cells
-        spread = (F.abs(F.hash(self.id_col)) % files_per_cell).alias("_spread")
-        (
-            live
-            .repartition(self.n_cells * files_per_cell, F.col("cell_id"), spread)
-            .write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(tmp)
-        )
-        if split_threshold is not None and "radii" in side:
-            # cells changed: exact radii over the final layout (the
-            # no-split path keeps the old radii — deletes only shrink
-            # cells, so they remain valid upper bounds for free)
-            side["radii"] = self._cell_radii_of(
-                spark.read.parquet(tmp),
-                np.array(side["centers"], dtype=np.float64),
-            )
-        # the centroid sidecar lives inside the store dir — carry it
-        # over, along with the IVFPQ sidecars if built. Tombstones are
-        # NOT carried: this rewrite folds them into both tables (live
-        # codes rewritten below), so the swap is the physical delete.
-        # Aborted/pending gens clear too — the live rewrite just
-        # dropped their orphan rows physically.
-        side["aborted_gens"] = []
-        side["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, os.path.basename(self._centroid_path)), side)
-        rebal = live if split_threshold is not None else None
-        if os.path.exists(self._pq_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.pq import pq_encode
-
-                C = np.array(side["centers"], dtype=np.float64)
-                codes = pq_encode(
-                    rebal, self.pq_codebook(), id_col=self.id_col,
-                    vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
-                    cell_centroids=C if self.pq_is_residual() else None,
-                    rotation=self.pq_rotation(),
+            if split_threshold is not None and "radii" in side:
+                # cells changed: exact radii over the final layout (the
+                # no-split path keeps the old radii — deletes only shrink
+                # cells, so they remain valid upper bounds for free)
+                side["radii"] = self._cell_radii_of(
+                    spark.read.parquet(tmp),
+                    np.array(side["centers"], dtype=np.float64),
+                )
+            # carry the compressed legs: a rebalance re-encodes them from
+            # the rewritten rows, otherwise their live codes are
+            # rewritten as-is — either way this rewrite folds the
+            # tombstones into every table
+            legs = (os.path.exists(self._pq_path),
+                    os.path.exists(self._sq_params_path),
+                    os.path.exists(self._bq_params_path))
+            if split_threshold is not None:
+                carried = self._encode_codes(
+                    live, np.array(side["centers"], dtype=np.float64), *legs
                 )
             else:
-                codes = self._codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._pq_path)))
-            )
-        if os.path.exists(self._pq_codebook_path):
-            shutil.copy(
-                self._pq_codebook_path,
-                os.path.join(tmp, os.path.basename(self._pq_codebook_path)),
-            )
-        if os.path.exists(self._sq_params_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.sq import sq_encode
-
-                codes = sq_encode(
-                    rebal, self.sq_params(), id_col=self.id_col,
-                    vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
+                carried = [
+                    (self._gens.rows(spark, path), path)
+                    for path, on in zip((self._pq_path, self._sq_path, self._bq_path), legs)
+                    if on
+                ]
+            for codes, path in carried:
+                codes.write.mode("overwrite").partitionBy("cell_id").parquet(
+                    os.path.join(tmp, os.path.basename(path))
                 )
-            else:
-                codes = self._sq_codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._sq_path)))
-            )
-            shutil.copy(
-                self._sq_params_path,
-                os.path.join(tmp, os.path.basename(self._sq_params_path)),
-            )
-        if os.path.exists(self._bq_params_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.bq import bq_encode
-
-                with open(self._bq_params_path) as f:
-                    bside = json.load(f)
-                codes = bq_encode(
-                    rebal, int(bside["dim"]), vec_col=self.vec_col,
-                    n_bits=bside.get("n_bits"),
-                    seed=int(bside.get("seed", 42)),
-                ).select(self.id_col, "bq_code", "cell_id", "_gen")
-            else:
-                codes = self._bq_codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._bq_path)))
-            )
-            shutil.copy(
-                self._bq_params_path,
-                os.path.join(tmp, os.path.basename(self._bq_params_path)),
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+            for params in (self._pq_codebook_path, self._sq_params_path,
+                           self._bq_params_path):
+                if os.path.exists(params):
+                    shutil.copy(params, os.path.join(tmp, os.path.basename(params)))
 
     # -- IVFPQ ---------------------------------------------------------------
 
@@ -640,7 +536,7 @@ class IVFStore:
 
         # live rows only, _gen retained: the codes table mirrors the raw
         # rows' generations so later deletes filter both tables alike
-        df = self._read_live(spark)
+        df = self._gens.rows(spark)
         MU = self.centroids() if residual else None
         R = None
         if opq:
@@ -664,7 +560,7 @@ class IVFStore:
         # built_gen: the snapshot floor — rows deleted before this build
         # are physically absent from the codes (r9)
         side = {**cb.to_dict(), "residual": bool(residual),
-                "built_gen": self._gen()}
+                "built_gen": self._gens.gen()}
         if R is not None:
             side["rotation"] = R.tolist()
         atomic_dump_json(self._pq_codebook_path, side)
@@ -706,7 +602,7 @@ class IVFStore:
         keeps the codes in sync with the existing bounds."""
         from distributedvectordatabase_spark.operators.sq import sq_encode, sq_train
 
-        df = self._read_live(spark)
+        df = self._gens.rows(spark)
         params = sq_train(df, vec_col=self.vec_col)
         (
             sq_encode(df, params, id_col=self.id_col, vec_col=self.vec_col,
@@ -718,7 +614,7 @@ class IVFStore:
         # built_gen: snapshot floor (r9) — see build_pq
         atomic_dump_json(
             self._sq_params_path,
-            {**params.to_dict(), "built_gen": self._gen()},
+            {**params.to_dict(), "built_gen": self._gens.gen()},
         )
 
     def sq_params(self):
@@ -728,7 +624,7 @@ class IVFStore:
             return SQParams.from_dict(json.load(f))
 
     def _sq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._sq_path)
+        return self._gens.rows(spark, self._sq_path)
 
     def knn_sq(
         self,
@@ -772,8 +668,8 @@ class IVFStore:
             order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
             cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
         probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._sq_path, as_of_gen).drop(
-            "_gen"
+        codes = self._gens.rows(spark, self._sq_path, as_of_gen).drop(
+            GEN_COL
         ).filter(F.col("cell_id").isin(probed))
         if where is not None:
             codes = codes.join(
@@ -823,8 +719,8 @@ class IVFStore:
             order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
             cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
         probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._pq_path, as_of_gen).drop(
-            "_gen"
+        codes = self._gens.rows(spark, self._pq_path, as_of_gen).drop(
+            GEN_COL
         ).filter(F.col("cell_id").isin(probed))
         if where is not None:
             codes = codes.join(
@@ -883,7 +779,7 @@ class IVFStore:
             normalize = bool(prev.get("normalize", False))
         dim = int(self.centroids().shape[1])
         (
-            bq_encode(self._read_live(spark), dim, vec_col=self.vec_col,
+            bq_encode(self._gens.rows(spark), dim, vec_col=self.vec_col,
                       n_bits=n_bits, seed=int(seed))
             .select(self.id_col, "bq_code", "cell_id", "_gen")
             .write.mode("overwrite")
@@ -896,11 +792,8 @@ class IVFStore:
              "n_bits": None if n_bits is None else int(n_bits),
              "seed": int(seed), "normalize": bool(normalize),
              # snapshot floor (r9) — see build_pq
-             "built_gen": self._gen()},
+             "built_gen": self._gens.gen()},
         )
-
-    def _bq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._bq_path)
 
     def knn_bq(
         self,
@@ -950,8 +843,8 @@ class IVFStore:
             order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
             cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
         probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._bq_path, as_of_gen).drop(
-            "_gen"
+        codes = self._gens.rows(spark, self._bq_path, as_of_gen).drop(
+            GEN_COL
         ).filter(F.col("cell_id").isin(probed))
         if where is not None:
             codes = codes.join(
@@ -1007,22 +900,7 @@ class IVFStore:
         table and the PQ codes table, so ADC shortlists never spend
         slots on dead ids and ``rerank=0`` results stay correct.
         ``compact()`` folds both tables physically."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            append_tombstones,
-            heal_pending,
-            next_gen,
-        )
-
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        # heal any crashed append first: its orphan rows must move to
-        # aborted_gens BEFORE this delete bumps the committed horizon
-        # past them, or they would surface as committed rows
-        side = heal_pending(side)
-        gen = next_gen(side)
-        side["gen"] = int(gen)  # gen durable BEFORE its tombstones exist
-        atomic_dump_json(self._centroid_path, side)
-        append_tombstones(spark, self._tombstone_path, self.id_col, ids, gen)
+        self._gens.delete(spark, ids)
 
     @locked_writer
     def delete_where(self, spark: SparkSession, predicate) -> int:
@@ -1031,22 +909,8 @@ class IVFStore:
         SQL string), typically over the co-located metadata columns
         (``build(meta_cols=...)``) — retention sweeps and policy
         take-downs by attribute, not id list. Returns the number of
-        ids tombstoned. One scan to find the ids; the delete itself
-        stays O(deleted)."""
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # pin the matching ids BEFORE tombstoning: the tombstone write
-        # must not re-execute a plan that reads the tombstone dir it
-        # is appending to (self-referential read-under-write)
-        ids = (
-            self.read(spark)
-            .filter(cond)
-            .select(self.id_col)
-            .localCheckpoint(eager=True)
-        )
-        n = ids.count()
-        if n:
-            self.delete(spark, ids)
-        return n
+        ids tombstoned (the shared tombstones.delete_where)."""
+        return delete_where(self, spark, predicate)
 
     @locked_writer
     def upsert(self, df: DataFrame) -> None:
@@ -1058,50 +922,8 @@ class IVFStore:
 
     # -- query ---------------------------------------------------------------
 
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter: rows above the persisted gen
-        (in-flight or crashed append) and aborted-gen orphans are
-        invisible — both literal pushdown predicates, applied under
-        every read BEFORE the tombstone anti-join."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        return filter_committed(df, self._gen(), self._aborted_gens())
-
-    def _read_live(self, spark: SparkSession) -> DataFrame:
-        from distributedvectordatabase_spark.sources.tombstones import filter_live
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_live(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col,
-        )
-
     def _codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._pq_path)
-
-    def _any_codes(
-        self, spark: SparkSession, path: str, as_of_gen: int | None = None
-    ) -> DataFrame:
-        """Shared codes-table read for the PQ/SQ/BQ sidecars: committed
-        rows, tombstone-filtered live or reconstructed as-of (codes
-        rows carry the raw rows' ``_gen`` — build keeps it, append
-        syncs it inline)."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        df = self._committed(cached_parquet(spark, path))
-        if as_of_gen is None:
-            return filter_live(spark, df, self._tombstone_path, self.id_col)
-        return filter_as_of(
-            spark, df, self._tombstone_path, self.id_col, as_of_gen
-        )
+        return self._gens.rows(spark, self._pq_path)
 
     def _allowed_ids(
         self, spark: SparkSession, where: str, as_of_gen: int | None
@@ -1137,23 +959,10 @@ class IVFStore:
         a training run starts and ``read(as_of_gen=...)`` reconstructs
         exactly the corpus that run saw (see tombstones.filter_as_of
         for the semantics and the compaction-bounded history caveat)."""
-        return self._gen()
+        return self._gens.gen()
 
     def read(self, spark: SparkSession, as_of_gen: int | None = None) -> DataFrame:
-        if as_of_gen is None:
-            return self._read_live(spark).drop("_gen")
-        from distributedvectordatabase_spark.sources.tombstones import filter_as_of
-
-        # aborted gens were never committed at ANY point in history, so
-        # the snapshot excludes them regardless of as_of_gen
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_as_of(
-            spark,
-            self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path,
-            self.id_col, as_of_gen,
-        ).drop("_gen")
+        return self._gens.rows(spark, as_of_gen=as_of_gen).drop(GEN_COL)
 
     def knn(
         self,

@@ -15,7 +15,10 @@ what a real deployment gets from a metastore/manifest catalog
 directory listing altogether; this is the poor man's manifest).
 
 Invalidation: the fingerprint folds every file's (name, mtime_ns,
-size) under the directory, so any append/delete/compact/overwrite —
+size, inode, ctime_ns) under the directory — the inode and ctime catch
+a same-size rewrite inside the mtime granularity, and a file removed
+between the listing and its stat is skipped — so any
+append/delete/compact/overwrite —
 including the driver's in-place testdata regeneration and the stores'
 sidecar-committed mutations — produces a new key and a fresh read.
 Stale entries are dropped eagerly (same path, different fingerprint)
@@ -38,8 +41,13 @@ def _dir_fingerprint(path: str) -> tuple:
     for root, _dirs, files in os.walk(path):
         rel = os.path.relpath(root, path)
         for f in sorted(files):
-            st = os.stat(os.path.join(root, f))
-            out.append((rel, f, st.st_mtime_ns, st.st_size))
+            try:
+                st = os.stat(os.path.join(root, f))
+            except FileNotFoundError:
+                continue  # removed between the listing and the stat
+            out.append(
+                (rel, f, st.st_mtime_ns, st.st_size, st.st_ino, st.st_ctime_ns)
+            )
     return tuple(out)
 
 

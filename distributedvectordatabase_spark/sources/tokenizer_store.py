@@ -41,8 +41,8 @@ retrain cost is O(n_merges × vocabulary), independent of corpus size.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,13 +53,8 @@ from distributedvectordatabase_spark.operators.bpe import (
 )
 from distributedvectordatabase_spark.sources.tombstones import (
     GEN_COL,
-    append_tombstones,
-    atomic_dump_json,
-    filter_committed,
-    filter_live,
-    heal_pending,
+    Generations,
     locked_writer,
-    next_gen,
 )
 
 __all__ = ["TokenizerStore"]
@@ -68,11 +63,12 @@ __all__ = ["TokenizerStore"]
 class TokenizerStore:
     def __init__(self, path: str, n_merges: int | None = None):
         self.path = path
+        self._gens = Generations(path, "_config.json")
         # reopen contract (IVFStore pattern): the persisted config wins
         # over the default; an EXPLICIT n_merges wins for new trains
         self.n_merges = 50 if n_merges is None else int(n_merges)
-        if n_merges is None and os.path.exists(self._config_path):
-            self.n_merges = int(self._config().get("n_merges", self.n_merges))
+        if n_merges is None:
+            self.n_merges = int(self._gens.load().get("n_merges", self.n_merges))
 
     # -- layout ---------------------------------------------------------
 
@@ -87,22 +83,6 @@ class TokenizerStore:
     @property
     def _pieces_path(self) -> str:
         return os.path.join(self.path, "pieces")
-
-    @property
-    def _config_path(self) -> str:
-        return os.path.join(self.path, "_config.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _config(self) -> dict:
-        with open(self._config_path) as f:
-            return json.load(f)
-
-    def _write_config(self, cfg: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        atomic_dump_json(self._config_path, cfg)
 
     # -- sufficient statistics -------------------------------------------
 
@@ -127,17 +107,7 @@ class TokenizerStore:
         )
 
     def _counts_live(self, spark: SparkSession) -> DataFrame:
-        cfg = self._config()
-        return filter_live(
-            spark,
-            filter_committed(
-                spark.read.parquet(self._counts_path),
-                int(cfg.get("gen", 0)),
-                cfg.get("aborted_gens", ()),
-            ),
-            self._tombstone_path,
-            "doc_id",
-        )
+        return self._gens.visible(spark, spark.read.parquet(self._counts_path))
 
     def vocab(self, spark: SparkSession) -> DataFrame:
         """(word, freq) over the LIVE registered corpus — what the
@@ -176,34 +146,24 @@ class TokenizerStore:
         fresh training forever (merges() picks max gen), and old
         tombstones would silently kill re-registered doc ids (new rows
         at _gen=1 fail the '_gen > tombstone gen' survival rule)."""
-        import shutil
-
-        for stale in (self._merges_path, self._tombstone_path):
+        for stale in (self._merges_path, self._gens.tombstones):
             if os.path.exists(stale):
                 shutil.rmtree(stale)
-        (
-            self._word_counts_of(docs, id_col, text_col)
-            .withColumn(GEN_COL, F.lit(1))
-            .write.mode("overwrite")
-            .parquet(self._counts_path)
-        )
-        cfg = {
-            "n_merges": self.n_merges,
-            "tokenize": "whitespace",
-            "gen": 1,
-        }
-        if ingest_batch is not None:
-            cfg["ingest_batch"] = int(ingest_batch)
-        self._write_config(cfg)
+        with self._gens.build(ingest_batch) as (gen, cfg):
+            (
+                self._word_counts_of(docs, id_col, text_col)
+                .withColumn(GEN_COL, F.lit(gen))
+                .write.mode("overwrite")
+                .parquet(self._counts_path)
+            )
+            cfg.update(n_merges=self.n_merges, tokenize="whitespace")
 
     def ingest_batch(self) -> int:
         """Last streaming batch id whose registration COMMITTED
         (recorded by the same config dump that bumps gen —
         stream_tokenizer_ingest's exactly-once marker). -1 if the
         store never streamed."""
-        if os.path.exists(self._config_path):
-            return int(self._config().get("ingest_batch", -1))
-        return -1
+        return self._gens.ingest_batch()
 
     @locked_writer
     def train(
@@ -241,25 +201,17 @@ class TokenizerStore:
         exact regardless of when the loop runs). ``ingest_batch``
         rides the config commit (the shared exactly-once marker).
 
-        Crash-atomic counts (tombstones.heal_pending two-phase
+        Crash-atomic counts (tombstones.Generations two-phase
         protocol): the merges rewrite is derived data, repaired by
         ``retrain()``."""
         spark = docs.sparkSession
-        cfg = heal_pending(self._config())
-        gen = next_gen(cfg)
-        cfg["pending_gen"] = gen
-        self._write_config(cfg)
-        (
-            self._word_counts_of(docs, id_col, text_col)
-            .withColumn(GEN_COL, F.lit(gen))
-            .write.mode("append")
-            .parquet(self._counts_path)
-        )
-        cfg["gen"] = gen
-        cfg["pending_gen"] = None
-        if ingest_batch is not None:
-            cfg["ingest_batch"] = int(ingest_batch)
-        self._write_config(cfg)
+        with self._gens.append(ingest_batch) as (gen, _cfg):
+            (
+                self._word_counts_of(docs, id_col, text_col)
+                .withColumn(GEN_COL, F.lit(gen))
+                .write.mode("append")
+                .parquet(self._counts_path)
+            )
         return self.retrain(spark) if retrain else []
 
     @locked_writer
@@ -270,11 +222,7 @@ class TokenizerStore:
         corpus. The take-down story the vector stores already have,
         for the one artifact that would otherwise embed a removed
         document's vocabulary forever."""
-        cfg = heal_pending(self._config())
-        gen = next_gen(cfg)
-        cfg["gen"] = gen  # gen durable BEFORE its tombstones exist
-        self._write_config(cfg)
-        append_tombstones(spark, self._tombstone_path, "doc_id", ids, gen)
+        self._gens.delete(spark, ids)
         return self.retrain(spark)
 
     @locked_writer
@@ -285,28 +233,16 @@ class TokenizerStore:
         rows, so — unlike the row tables, whose history cost is the
         data itself — truncating it reclaims nothing; pinned tokenizer
         versions stay reproducible through compaction."""
-        import shutil
-
-        tmp = self.path.rstrip("/") + "__compacting"
-        self._counts_live(spark).write.mode("overwrite").parquet(
-            os.path.join(tmp, "word_counts")
-        )
-        cfg = self._config()
-        cfg["aborted_gens"] = []
-        cfg["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, "_config.json"), cfg)
-        if os.path.exists(self._merges_path):
-            shutil.copytree(
-                self._merges_path, os.path.join(tmp, "merges")
+        with self._gens.compact() as (tmp, _cfg):
+            self._counts_live(spark).write.mode("overwrite").parquet(
+                os.path.join(tmp, "word_counts")
             )
-        if os.path.exists(self._pieces_path):
-            # the unigram artifact versions ride through compaction
-            # exactly like the merge versions
-            shutil.copytree(
-                self._pieces_path, os.path.join(tmp, "pieces")
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+            # the merge and unigram artifact versions ride through
+            for versions in (self._merges_path, self._pieces_path):
+                if os.path.exists(versions):
+                    shutil.copytree(
+                        versions, os.path.join(tmp, os.path.basename(versions))
+                    )
 
     @locked_writer
     def retrain(self, spark: SparkSession) -> list[tuple[str, str, int]]:
@@ -321,7 +257,7 @@ class TokenizerStore:
         retrain at the same gen overwrites its own version directory —
         the crash repair for a failed merges write stays idempotent
         (derived data, like the IVF codes tables)."""
-        gen = int(self._config().get("gen", 0))
+        gen = self._gens.gen()
         merges = bpe_train_from_vocab(self.vocab(spark), self.n_merges)
         rows = [(i, a, b, int(c)) for i, (a, b, c) in enumerate(merges)]
         if rows:
@@ -353,18 +289,18 @@ class TokenizerStore:
         reproducibility."""
         from distributedvectordatabase_spark.operators.unigram import unigram_train
 
-        gen = int(self._config().get("gen", 0))
+        gen = self._gens.gen()
         vocab, _report = unigram_train(None, wv=self.vocab(spark), **train_kw)
         rows = sorted(vocab.items())
         df = spark.createDataFrame(rows or [], "piece string, logp double")
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self._pieces_path, f"gen={gen}")
         )
-        cfg = self._config()
+        cfg = self._gens.load()
         cfg["unigram"] = {
             k: v for k, v in train_kw.items() if isinstance(v, (int, float, str))
         }
-        self._write_config(cfg)
+        self._gens.dump(cfg)
         return vocab
 
     def unigram_versions(self, spark: SparkSession) -> list[int]:
@@ -431,7 +367,7 @@ class TokenizerStore:
     def current_gen(self) -> int:
         """The store's persisted generation — pin it when a training
         run starts (the shared store contract)."""
-        return int(self._config().get("gen", 0))
+        return self._gens.gen()
 
     def merge_versions(self, spark: SparkSession) -> list[int]:
         """Gens that have a trained merge version, ascending. Empty if

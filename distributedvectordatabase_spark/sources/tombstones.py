@@ -1,29 +1,49 @@
-"""Shared merge-on-read tombstone mechanics for the stores.
+"""The one store lifecycle: generation commits and merge-on-read deletes.
 
-Both VectorStore and IVFStore implement delete the same way (the
-reference has no delete endpoint at all — coordinator_server.py
-exposes only add_vectors/search/stats — but a training-data store
-needs take-downs): every written row carries a ``_gen`` generation,
-``delete`` appends (id, ``_del_gen``) rows to a hidden
-``_tombstones/`` directory inside the store (underscore-prefixed, so
-Spark's file index never treats it as data), and reads drop a row
-when a tombstone for its id carries a gen >= the row's own. The
-filter is ONE broadcast join of the aggregated tombstone table above
-the scan — partition pruning and predicate pushdown on the store side
-are unaffected — and compaction folds tombstones in physically.
+All five persistent stores (VectorStore, IVFStore, SigStore, TextIndex,
+TokenizerStore) and the vector stream share a single protocol, and
+each store holds one :class:`Generations` object that runs it over the
+store's existing JSON sidecar (``_lsh.json``, ``_centroids.json``,
+``_config.json`` or ``_stats.json``). The reference has no delete at
+all — coordinator_server.py exposes only add_vectors/search/stats — but
+a training-data store needs take-downs.
 
-Generation ordering makes the scheme crash-safe without transactions:
-a delete persists its gen to the store's config sidecar BEFORE its
-tombstones exist, a write persists its gen only AFTER its data lands,
-so any crash burns at most an unused gen number — never a resurrected
-row, never a wrongly-killed one (the survival rule is strict
+- **Generations.** Every written row carries a ``_gen``. The sidecar
+  records the committed ``gen``, a write intent ``pending_gen``, the
+  ``aborted_gens`` of crashed writes and the streaming ``ingest_batch``
+  marker. Reads drop rows above ``gen`` or in ``aborted_gens``
+  (:func:`filter_committed`, two literal scan predicates).
+- **Append** (:meth:`Generations.append`): heal a crashed intent into
+  ``aborted_gens``, allocate the next gen, persist the intent, let the
+  store write its data, then ONE sidecar dump commits the gen, clears
+  the intent and stamps the ingest batch. Store fields the body puts in
+  the sidecar dict (TextIndex's corpus stats, IVF's widened radii) ride
+  the same dump. A crash anywhere before it leaves invisible orphans.
+- **Delete** (:meth:`Generations.delete`): the gen is made durable
+  BEFORE its tombstones exist. ``delete`` appends (id, ``_del_gen``)
+  rows to the hidden ``_tombstones/`` directory (underscore-prefixed,
+  so Spark's file index never treats it as data), and reads drop a row
+  when a tombstone for its id carries a gen >= the row's own — ONE
+  broadcast join of the aggregated tombstone table above the scan, so
+  partition pruning and predicate pushdown are unaffected. The vector
+  stream burns its gen the same way (:meth:`Generations.burn`).
+- **Compact** (:meth:`Generations.compact`): the store writes its live
+  rows to ``<path>__compacting``; the sidecar follows with aborted and
+  pending gens cleared, then the directories swap — the physical
+  delete.
+
+Gen ordering makes the scheme crash-safe without transactions: any
+crash burns at most an unused gen number — never a resurrected row,
+never a wrongly-killed one (the survival rule is strict
 ``row._gen > tombstone gen``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import tempfile
 import threading
 import time
@@ -549,6 +569,169 @@ def locked_writer(fn):
             return fn(self, *args, **kwargs)
 
     return wrapper
+
+
+class Generations:
+    """The generation-commit protocol over one store's JSON sidecar.
+
+    ``sidecar`` names the store's config file inside ``path``; ``fields``
+    (optional) returns the store-owned keys refreshed on every dump, so
+    a store never writes its sidecar around this object. ``id_col`` keys
+    the tombstones. Callers hold the store's writer lease."""
+
+    def __init__(self, path: str, sidecar: str, id_col: str = "doc_id",
+                 fields=None):
+        self.path = path
+        self.sidecar = os.path.join(path, sidecar)
+        self.tombstones = os.path.join(path, "_tombstones")
+        self.id_col = id_col
+        self._fields = fields
+
+    # -- sidecar state -------------------------------------------------------
+
+    def load(self) -> dict:
+        """The sidecar dict ({} for a new store)."""
+        if os.path.exists(self.sidecar):
+            with open(self.sidecar) as f:
+                return json.load(f)
+        return {}
+
+    def dump(self, side: dict, path: str | None = None) -> None:
+        """Atomically persist ``side`` (to the sidecar, or to ``path``)."""
+        if self._fields is not None:
+            side.update(self._fields())
+        path = path or self.sidecar
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        atomic_dump_json(path, side)
+
+    def gen(self) -> int:
+        """Last committed write/delete generation (0 for a new store)."""
+        return int(self.load().get("gen", 0))
+
+    def ingest_batch(self) -> int:
+        """Last streaming batch id whose write committed (the exactly-once
+        marker that rides the commit dump); -1 if the store never
+        streamed."""
+        return int(self.load().get("ingest_batch", -1))
+
+    # -- reads ---------------------------------------------------------------
+
+    def committed(self, df: DataFrame) -> DataFrame:
+        """Drop rows of uncommitted or aborted writes (filter_committed
+        against the current sidecar)."""
+        side = self.load()
+        return filter_committed(
+            df, int(side.get("gen", 0)), side.get("aborted_gens", ())
+        )
+
+    def visible(self, spark: SparkSession, df: DataFrame,
+                as_of_gen: int | None = None) -> DataFrame:
+        """Committed rows of ``df`` minus tombstoned ones — live, or the
+        snapshot at ``as_of_gen`` (aborted gens were never committed at
+        any point in history, so a snapshot drops them too). ``_gen`` is
+        kept."""
+        df = self.committed(df)
+        if as_of_gen is None:
+            return filter_live(spark, df, self.tombstones, self.id_col)
+        return filter_as_of(spark, df, self.tombstones, self.id_col, int(as_of_gen))
+
+    def rows(self, spark: SparkSession, path: str | None = None,
+             as_of_gen: int | None = None) -> DataFrame:
+        """``visible`` over the (memoized) parquet scan of ``path`` —
+        the store root by default."""
+        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
+
+        return self.visible(spark, cached_parquet(spark, path or self.path), as_of_gen)
+
+    # -- writes --------------------------------------------------------------
+
+    @contextlib.contextmanager
+    def build(self, ingest_batch: int | None = None):
+        """A (re)build: the body writes its data at gen 1 with overwrite
+        semantics and fills the yielded FRESH sidecar dict; the dump
+        after the data is the commit (a crashed first build leaves no
+        sidecar, so nothing it wrote is visible)."""
+        side: dict = {}
+        yield 1, side
+        side["gen"] = 1
+        if ingest_batch is not None:
+            side["ingest_batch"] = int(ingest_batch)
+        self.dump(side)
+
+    @contextlib.contextmanager
+    def append(self, ingest_batch: int | None = None):
+        """Two-phase append: heal, allocate, persist the intent, run the
+        body (which writes rows at the yielded gen and may edit the
+        yielded sidecar dict), then commit gen + ingest marker + the
+        body's edits in ONE dump. A body that raises commits nothing."""
+        side = heal_pending(self.load())
+        gen = next_gen(side)
+        side.setdefault("gen", 0)  # a first append: nothing committed yet
+        side["pending_gen"] = gen
+        self.dump(side)
+        yield gen, side
+        side["gen"] = gen
+        side["pending_gen"] = None
+        if ingest_batch is not None:
+            side["ingest_batch"] = int(ingest_batch)
+        self.dump(side)
+
+    def burn(self, side: dict | None = None) -> int:
+        """Allocate a gen and persist it as committed BEFORE its effects
+        exist (tombstones, streamed rows): a crash after this burns an
+        unused number, while the reverse order could hand a later append
+        the same gen. A crashed append is healed first, or bumping the
+        horizon past its orphans would surface them. ``side`` lets a
+        store pass a sidecar dict it already holds."""
+        side = heal_pending(self.load() if side is None else side)
+        gen = next_gen(side)
+        side["gen"] = gen
+        self.dump(side)
+        return gen
+
+    def delete(self, spark: SparkSession, ids, side: dict | None = None) -> int:
+        """Merge-on-read delete: burn a gen, then tombstone ``ids`` at it."""
+        gen = self.burn(side)
+        append_tombstones(spark, self.tombstones, self.id_col, ids, gen)
+        return gen
+
+    @contextlib.contextmanager
+    def compact(self):
+        """Yields (tmp dir, sidecar dict): the body writes the live rows
+        and any extra files under tmp; the sidecar follows with aborted
+        and pending gens cleared (their orphans were not rewritten), then
+        tmp replaces the store. Tombstones stay behind — the swap is the
+        physical delete."""
+        tmp = self.path.rstrip("/") + "__compacting"
+        side = self.load()
+        yield tmp, side
+        if side:
+            side["aborted_gens"] = []
+            side["pending_gen"] = None
+            self.dump(side, os.path.join(tmp, os.path.basename(self.sidecar)))
+        shutil.rmtree(self.path)
+        shutil.move(tmp, self.path)
+
+
+def delete_where(store, spark: SparkSession, predicate) -> int:
+    """Predicate delete for the vector stores (retention sweeps, policy
+    take-downs): tombstone every LIVE row of ``store`` matching
+    ``predicate`` (a Column or a SQL string) and return how many. One
+    scan finds the ids; the delete itself stays O(deleted)."""
+    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
+    # pin the matching ids BEFORE tombstoning: the tombstone write must
+    # not re-execute a plan that reads the tombstone dir it is
+    # appending to (self-referential read-under-write)
+    ids = (
+        store.read(spark)
+        .filter(cond)
+        .select(store.id_col)
+        .localCheckpoint(eager=True)
+    )
+    n = ids.count()
+    if n:
+        store.delete(spark, ids)
+    return n
 
 
 def check_codes_snapshot_floor(side: dict, as_of_gen: int, what: str) -> None:

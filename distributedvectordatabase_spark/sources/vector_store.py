@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +55,10 @@ from pyspark.sql.window import Window
 
 from distributedvectordatabase_spark.functions.lsh import SignLSH
 from distributedvectordatabase_spark.sources.tombstones import (
+    GEN_COL,
+    Generations,
     atomic_dump_json,
+    delete_where,
     locked_writer,
 )
 from distributedvectordatabase_spark.functions.vector import l2sq
@@ -75,19 +79,17 @@ class VectorStore:
         files_per_shard: int = 4,
     ):
         self.path = path
+        self._gens = Generations(path, "_lsh.json", fields=self._lsh_fields)
         # The store's LSH config (projection seed/shape) determines the
         # on-disk shard assignment, so on reopen the persisted sidecar
         # is authoritative: a default-constructed SignLSH against a
         # store built with different parameters would silently bucket
         # queries wrong (the TextIndex reopen bug class). An EXPLICIT
         # lsh argument still wins — callers who pass one own the match.
-        cfg = None
+        cfg = {}
         if lsh is None or id_col is None or vec_col is None:
-            cfg_path = os.path.join(path, "_lsh.json")
-            if os.path.exists(cfg_path):
-                with open(cfg_path) as f:
-                    cfg = json.load(f)
-        if lsh is None and cfg is not None:
+            cfg = self._gens.load()
+        if lsh is None and cfg:
             lsh = SignLSH(
                 dim=int(cfg["dim"]),
                 num_fns=int(cfg["num_fns"]),
@@ -95,17 +97,14 @@ class VectorStore:
                 seed=int(cfg["seed"]),
             )
         self.lsh = lsh or SignLSH()
-        self.id_col = id_col or (cfg or {}).get("id_col", "vec_id")
-        self.vec_col = vec_col or (cfg or {}).get("vec_col", "embedding")
+        self.id_col = id_col or cfg.get("id_col", "vec_id")
+        self.vec_col = vec_col or cfg.get("vec_col", "embedding")
+        self._gens.id_col = self.id_col
         self.files_per_shard = files_per_shard
 
     @property
     def _lsh_config_path(self) -> str:
-        return os.path.join(self.path, "_lsh.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
+        return self._gens.sidecar
 
     # underscore-prefixed entries are invisible to spark.read.parquet
     # on self.path, so the SQ8 codes table and its bounds sidecar can
@@ -126,45 +125,16 @@ class VectorStore:
     def _bq_params_path(self) -> str:
         return os.path.join(self.path, "_bq_params.json")
 
-    def _gen(self) -> int:
-        """Last persisted write/delete generation (0 for a new or
-        pre-generation store)."""
-        if os.path.exists(self._lsh_config_path):
-            with open(self._lsh_config_path) as f:
-                return int(json.load(f).get("gen", 0))
-        return 0
-
-    def _lsh_config(self) -> dict:
-        if os.path.exists(self._lsh_config_path):
-            with open(self._lsh_config_path) as f:
-                return json.load(f)
-        return {}
-
-    def _aborted_gens(self) -> tuple:
-        """Gens burned by crashed appends (tombstones.heal_pending) —
-        their orphan rows are filtered from every read and reclaimed
-        physically by compact()."""
-        return tuple(self._lsh_config().get("aborted_gens", ()))
-
-    def _write_lsh_config(self, gen: int | None = None, **extras) -> None:
-        """Persist the sidecar, PRESERVING commit-protocol fields
-        (pending_gen/aborted_gens) unless overridden via ``extras`` —
-        the LSH fields themselves are always refreshed from self."""
-        os.makedirs(self.path, exist_ok=True)
-        cfg = self._lsh_config()
-        cfg.update(
-            {
-                "dim": self.lsh.dim,
-                "num_fns": self.lsh.num_fns,
-                "num_tables": self.lsh.num_tables,
-                "seed": self.lsh.seed,
-                "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "gen": self._gen() if gen is None else int(gen),
-            }
-        )
-        cfg.update(extras)
-        atomic_dump_json(self._lsh_config_path, cfg)
+    def _lsh_fields(self) -> dict:
+        """The LSH/column config every sidecar dump refreshes."""
+        return {
+            "dim": self.lsh.dim,
+            "num_fns": self.lsh.num_fns,
+            "num_tables": self.lsh.num_tables,
+            "seed": self.lsh.seed,
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+        }
 
     # -- ingest -------------------------------------------------------------
 
@@ -221,21 +191,6 @@ class VectorStore:
                     "store predates delete support (no _gen column); run "
                     "compact(spark) once to upgrade before appending"
                 )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._lsh_config())
-        gen = next_gen(cfg)
-        if mode == "append":
-            # phase 1 (tombstones.heal_pending protocol, shared with
-            # TextIndex/IVFStore): persist the write intent BEFORE any
-            # data job — a crash from here on leaves rows no read sees
-            self._write_lsh_config(
-                pending_gen=gen,
-                aborted_gens=cfg.get("aborted_gens", []),
-            )
         # keep the SQ8 codes sidecar in sync on append: pin the
         # prepared batch so the raw write and the codes write see the
         # SAME rows (a non-deterministic input recomputed per write
@@ -243,20 +198,20 @@ class VectorStore:
         # append contract). A static overwrite drops the whole store
         # dir, sidecars included, so only append needs the sync.
         sync_sq = mode == "append" and os.path.exists(self._sq_params_path)
+        commit = self._gens.append() if mode == "append" else self._gens.build()
         try:
-            out = self._prepare(df, validate_dim, gen=gen)
-            if sync_sq:
-                out = out.cache()
-            out.write.mode(mode).partitionBy("shard_id").parquet(self.path)
-            # THE commit: gen bumps and the intent clears in one dump,
-            # only AFTER the data lands — a crash mid-write leaves the
-            # orphan rows above the committed horizon (invisible via
-            # filter_committed) for the next writer to heal. It must
-            # also land BEFORE the SQ encode below: if that second write
-            # fails, _gen (g+1) != the SQ synced gen (g) and knn_sq's
-            # staleness guard trips — persisting after would leave both
-            # at g and the guard would pass on codes missing these rows.
-            self._write_lsh_config(gen=gen, pending_gen=None)
+            # the commit dump lands only AFTER the data (a crash
+            # mid-write leaves orphans above the committed horizon for
+            # the next writer to heal) and BEFORE the SQ encode below:
+            # if that second write fails, _gen (g+1) != the SQ synced
+            # gen (g) and knn_sq's staleness guard trips — committing
+            # after would leave both at g and the guard would pass on
+            # codes missing these rows.
+            with commit as (gen, _side):
+                out = self._prepare(df, validate_dim, gen=gen)
+                if sync_sq:
+                    out = out.cache()
+                out.write.mode(mode).partitionBy("shard_id").parquet(self.path)
             if sync_sq:
                 from distributedvectordatabase_spark.operators.sq import sq_encode
 
@@ -270,7 +225,7 @@ class VectorStore:
                     (
                         sq_encode(out, self.sq_params(), id_col=self.id_col,
                                   vec_col=self.vec_col,
-                                  keep_cols=("shard_id", "_gen"))
+                                  keep_cols=("shard_id", GEN_COL))
                         .write.mode("append")
                         .partitionBy("shard_id")
                         .parquet(self._sq_path)
@@ -308,7 +263,7 @@ class VectorStore:
                 or 0
             )
             start = max(
-                start, max_tombstoned_id(spark, self._tombstone_path, self.id_col)
+                start, max_tombstoned_id(spark, self._gens.tombstones, self.id_col)
             )
             df = df.withColumn(
                 self.id_col, F.monotonically_increasing_id() + F.lit(start + 1)
@@ -338,61 +293,28 @@ class VectorStore:
         sink era (batch append/upsert become legal) and the finished
         stream cannot be resumed into it — by design, since a resumed
         sink's fresh log would hide the compacted files."""
-        import shutil
-
-        tmp = self.path.rstrip("/") + "__compacting"
         spread = (F.abs(F.hash(self.id_col)) % self.files_per_shard).alias("_spread")
-        (
-            self._read_live(spark)
-            .repartition(self.lsh.num_tables * self.files_per_shard, F.col("shard_id"), spread)
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(tmp)
-        )
-        if os.path.exists(self._lsh_config_path):
-            # aborted/pending clear — the live rewrite above dropped
-            # their orphan rows physically
-            cfg = self._lsh_config()
-            cfg["aborted_gens"] = []
-            cfg["pending_gen"] = None
-            atomic_dump_json(
-                os.path.join(tmp, os.path.basename(self._lsh_config_path)), cfg
-            )
-        # carry the SQ8 sidecar, folding tombstones into the codes
-        # table the same way the raw rewrite above does (the swap IS
-        # the physical delete for both tables)
-        if os.path.exists(self._sq_params_path):
+        with self._gens.compact() as (tmp, _side):
             (
-                self._sq_codes_live(spark)
+                self._gens.rows(spark)
+                .repartition(self.lsh.num_tables * self.files_per_shard, F.col("shard_id"), spread)
                 .write.mode("overwrite")
                 .partitionBy("shard_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._sq_path)))
+                .parquet(tmp)
             )
-            shutil.copy(
-                self._sq_params_path,
-                os.path.join(tmp, os.path.basename(self._sq_params_path)),
-            )
-        # same carry for the binary sidecar (no params beyond dim/gen)
-        if os.path.exists(self._bq_params_path):
-            from distributedvectordatabase_spark.sources.tombstones import (
-                filter_live,
-            )
-
-            (
-                filter_live(
-                    spark, self._committed(spark.read.parquet(self._bq_path)),
-                    self._tombstone_path, self.id_col,
-                )
-                .write.mode("overwrite")
-                .partitionBy("shard_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._bq_path)))
-            )
-            shutil.copy(
-                self._bq_params_path,
-                os.path.join(tmp, os.path.basename(self._bq_params_path)),
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+            # carry the SQ8 and binary sidecars, folding tombstones into
+            # the codes tables the same way the raw rewrite above does
+            # (the swap IS the physical delete for every table)
+            for codes, params in ((self._sq_path, self._sq_params_path),
+                                  (self._bq_path, self._bq_params_path)):
+                if os.path.exists(params):
+                    (
+                        self._gens.rows(spark, codes)
+                        .write.mode("overwrite")
+                        .partitionBy("shard_id")
+                        .parquet(os.path.join(tmp, os.path.basename(codes)))
+                    )
+                    shutil.copy(params, os.path.join(tmp, os.path.basename(params)))
 
     # -- delete / upsert ----------------------------------------------------
 
@@ -403,29 +325,7 @@ class VectorStore:
         bytes written, nothing rewritten — ``compact()`` reclaims the
         space. Rows appended AFTER the delete are untouched, so
         delete-then-append of the same id is a well-defined upsert."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._lsh_config())
-        gen = next_gen(cfg)
-        # persist the gen BEFORE the tombstones exist: if we crashed
-        # between the two, a burned gen number is harmless, while the
-        # reverse order could hand a later append the tombstone's own
-        # gen and wrongly kill its rows. A crashed append's orphans are
-        # healed into aborted_gens FIRST, or bumping the horizon past
-        # them would surface them as committed.
-        self._write_lsh_config(
-            gen=gen,
-            pending_gen=cfg.get("pending_gen"),
-            aborted_gens=cfg.get("aborted_gens", []),
-        )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            append_tombstones,
-        )
-
-        append_tombstones(spark, self._tombstone_path, self.id_col, ids, gen)
+        gen = self._gens.delete(spark, ids)
         # a delete never desyncs the codes tables (both sides filter
         # the same tombstones at read), so the sidecars stay current
         if os.path.exists(self._sq_params_path):
@@ -437,22 +337,9 @@ class VectorStore:
     def delete_where(self, spark: SparkSession, predicate) -> int:
         """Predicate delete (retention sweeps, policy take-downs):
         tombstone every LIVE row matching ``predicate`` (a Column or a
-        SQL string). Returns the number of ids tombstoned. One scan to
-        find the ids; the delete itself stays O(deleted)."""
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # pin the matching ids BEFORE tombstoning: the tombstone write
-        # must not re-execute a plan that reads the tombstone dir it is
-        # appending to (self-referential read-under-write)
-        ids = (
-            self.read(spark)
-            .filter(cond)
-            .select(self.id_col)
-            .localCheckpoint(eager=True)
-        )
-        n = ids.count()
-        if n:
-            self.delete(spark, ids)
-        return n
+        SQL string). Returns the number of ids tombstoned (the shared
+        tombstones.delete_where)."""
+        return delete_where(self, spark, predicate)
 
     @locked_writer
     def upsert(self, df: DataFrame, validate_dim: bool = True) -> None:
@@ -482,7 +369,7 @@ class VectorStore:
                 "store is an active streaming sink (_spark_metadata "
                 "present); run compact(spark) to finalize it before build_sq"
             )
-        live = self._read_live(spark)
+        live = self._gens.rows(spark)
         params = sq_train(live, vec_col=self.vec_col)
         (
             sq_encode(live, params, id_col=self.id_col, vec_col=self.vec_col,
@@ -495,7 +382,8 @@ class VectorStore:
             self._sq_params_path,
             # built_gen: the snapshot floor — rows deleted before this
             # build are physically absent from the codes (r9)
-            {**params.to_dict(), "gen": self._gen(), "built_gen": self._gen()},
+            {**params.to_dict(), "gen": self._gens.gen(),
+             "built_gen": self._gens.gen()},
         )
 
     def sq_params(self):
@@ -514,25 +402,10 @@ class VectorStore:
         with open(self._sq_params_path) as f:
             return int(json.load(f).get("gen", 0))
 
-    def _sq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._sq_codes(spark)
-
     def _sq_codes(
         self, spark: SparkSession, as_of_gen: int | None = None
     ) -> DataFrame:
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        df = self._committed(cached_parquet(spark, self._sq_path))
-        if as_of_gen is None:
-            return filter_live(spark, df, self._tombstone_path, self.id_col)
-        return filter_as_of(
-            spark, df, self._tombstone_path, self.id_col, as_of_gen
-        )
+        return self._gens.rows(spark, self._sq_path, as_of_gen)
 
     def _allowed_ids(
         self, spark: SparkSession, where: str, as_of_gen: int | None
@@ -561,7 +434,7 @@ class VectorStore:
         )
 
         if as_of_gen is None:
-            if side_gen != self._gen():
+            if side_gen != self._gens.gen():
                 raise ValueError(
                     f"{what} codes are stale: the store was written without "
                     f"a codes sync since the last build_{what}; re-run "
@@ -710,7 +583,7 @@ class VectorStore:
             seed = prev.get("seed", 42)
         if normalize is VectorStore._BQ_KEEP:
             normalize = bool(prev.get("normalize", False))
-        live = self._read_live(spark)
+        live = self._gens.rows(spark)
         (
             bq_encode(live, self.lsh.dim, vec_col=self.vec_col,
                       n_bits=n_bits, seed=seed)
@@ -721,12 +594,12 @@ class VectorStore:
         )
         atomic_dump_json(
             self._bq_params_path,
-            {"dim": self.lsh.dim, "gen": self._gen(),
+            {"dim": self.lsh.dim, "gen": self._gens.gen(),
              "n_bits": n_bits, "seed": int(seed),
              "normalize": bool(normalize),
              # snapshot floor: rows deleted before this build are
              # physically absent from the codes (r9)
-             "built_gen": self._gen()},
+             "built_gen": self._gens.gen()},
         )
 
     def _bq_record_gen(self, gen: int) -> None:
@@ -775,10 +648,6 @@ class VectorStore:
             _dist_expr,
             collect_query_batch,
         )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
 
         k = max(int(k), 1)
         fetch = max(int(rerank), 1) * k
@@ -787,17 +656,7 @@ class VectorStore:
         self._check_codes_gens(int(side.get("gen", 0)), as_of_gen, side, "bq")
         if metric is None:
             metric = "cosine" if side.get("normalize") else "l2sq"
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        raw_codes = self._committed(cached_parquet(spark, self._bq_path))
-        if as_of_gen is None:
-            codes = filter_live(
-                spark, raw_codes, self._tombstone_path, self.id_col
-            )
-        else:
-            codes = filter_as_of(
-                spark, raw_codes, self._tombstone_path, self.id_col, as_of_gen
-            )
+        codes = self._gens.rows(spark, self._bq_path, as_of_gen)
         shard_map = None
         if pruned:
             qrows = collect_query_batch(queries, qid_col, qvec_col)
@@ -856,54 +715,15 @@ class VectorStore:
 
     # -- read / query -------------------------------------------------------
 
-    def _read_live(self, spark: SparkSession) -> DataFrame:
-        """All live rows, ``_gen`` retained (internal; read() drops it).
-
-        The tombstone side aggregates to one row per deleted id and is
-        broadcast — deletes are rare relative to the corpus, and the
-        join sits ABOVE the scan, so shard_id partition pruning and
-        predicate pushdown on the store side are unaffected. If
-        tombstones ever grow large, compact() folds them away.
-        """
-        from distributedvectordatabase_spark.sources.tombstones import filter_live
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_live(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col,
-        )
-
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter (tombstones.filter_committed): rows
-        above the persisted gen (crashed/in-flight append) or in the
-        aborted list are invisible to every read."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        return filter_committed(df, self._gen(), self._aborted_gens())
-
     def current_gen(self) -> int:
         """The store's persisted write/delete generation — pin it when
         a training run starts and ``read(as_of_gen=...)`` reconstructs
         exactly the corpus that run saw (see tombstones.filter_as_of
         for the semantics and the compaction-bounded history caveat)."""
-        return self._gen()
+        return self._gens.gen()
 
     def read(self, spark: SparkSession, as_of_gen: int | None = None) -> DataFrame:
-        if as_of_gen is None:
-            return self._read_live(spark).drop("_gen")
-        from distributedvectordatabase_spark.sources.tombstones import filter_as_of
-
-        # aborted gens were never committed at ANY point in history, so
-        # the snapshot excludes them regardless of as_of_gen
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_as_of(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col, as_of_gen,
-        ).drop("_gen")
+        return self._gens.rows(spark, as_of_gen=as_of_gen).drop(GEN_COL)
 
     def knn(self, spark: SparkSession, queries: DataFrame, k: int = 10, pruned: bool = True,
             num_candidates: int = 2, metric: str = "l2sq",

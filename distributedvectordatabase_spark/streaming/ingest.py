@@ -76,8 +76,13 @@ def stream_ingest_vectors(
                 "into a fresh path (or keep using batch append)"
             )
 
-    gen = store._gen() + 1
-    store._write_lsh_config(gen=gen)  # durable before any row lands
+    # the stream's gen is committed before any row lands — the delete
+    # burn, which heals a crashed append's intent first (rows at a
+    # healed gen stay aborted, so the stream must never reuse it)
+    from distributedvectordatabase_spark.sources.tombstones import writer_lease
+
+    with writer_lease(store.path):
+        gen = store._gens.burn()
     bucketed = store.lsh.assign(
         stream, vec_col=store.vec_col, out="shard_id"
     ).withColumn("_gen", F.lit(gen))
@@ -382,8 +387,8 @@ def stream_neardup_ingest(
     Exactly-once: each batch overwrites its own ``batch=<id>`` sink
     directory (replays rewrite identical bytes), and the batch id rides
     the SAME config dump that commits the signature append's gen
-    (``SigStore.append(ingest_batch=...)`` — the r7 heal_pending
-    protocol shared by every store), so "batch committed" and
+    (``SigStore.append(ingest_batch=...)`` — the two-phase append of
+    tombstones.Generations, shared by every store), so "batch committed" and
     "signatures visible" are one atomic file write. A crash mid-append
     leaves orphan band/token rows above the committed horizon,
     invisible to every join; the replay heals them into the sidecar's
@@ -492,8 +497,8 @@ def stream_text_index_ingest(
     append landed but its marker did not. A crash mid-append leaves
     orphan posting rows above the committed horizon, invisible to
     every read; the replay heals them into the sidecar's aborted-gen
-    list and re-appends under a fresh gen (tombstones.heal_pending
-    protocol), so served scores equal the sequential batch fold's
+    list and re-appends under a fresh gen (tombstones.Generations
+    append), so served scores equal the sequential batch fold's
     exactly — never a double-counted batch (pinned in
     tests/test_streaming.py, including an injected crash between the
     data write and the commit). The first batch takes the build path,
@@ -580,7 +585,7 @@ def stream_ivf_ingest(
     A crash mid-append leaves orphan rows (raw and codes) above the
     committed horizon, invisible to every search; the replay heals
     them into the sidecar's aborted-gen list and re-appends under a
-    fresh gen (tombstones.heal_pending protocol) — never a
+    fresh gen (tombstones.Generations append) — never a
     double-inserted batch. Radii widened by the crashed attempt stay
     merely conservative. Orphans cost dead bytes until ``compact()``.
     Plain-parquet appends — the store never enters a
@@ -666,7 +671,7 @@ def stream_tokenizer_ingest(
 
     Exactly-once: the batch id rides the SAME config dump that commits
     the counts append's gen (``TokenizerStore.append(ingest_batch=``,
-    the shared heal_pending protocol), so a crash mid-append leaves
+    the shared Generations append), so a crash mid-append leaves
     orphan counts invisible to every retrain and the replay folds the
     statistics exactly once. The first batch takes the initial
     registration path, whose overwrite writes make its replay

@@ -23,6 +23,11 @@ from distributedvectordatabase_spark.sources.tables import load_table
 from tests.conftest import SF_SMALL
 
 
+def _sidecar(path, name):
+    with open(os.path.join(path, name)) as f:
+        return json.load(f)
+
+
 def _bm25(ix, spark, terms):
     return [
         (r.doc_id, r.score, r.rnk)
@@ -72,7 +77,14 @@ def test_text_index_append_crash_is_invisible_then_replays_once(spark, tmp_path)
 
     # compact reclaims the orphan bytes and clears the aborted list;
     # scores unchanged
-    live_postings = ix._committed(ix.postings(spark)).count()
+    from distributedvectordatabase_spark.sources.tombstones import (
+        filter_committed,
+    )
+
+    st = ix.stats()
+    live_postings = filter_committed(
+        ix.postings(spark), st["gen"], st["aborted_gens"]
+    ).count()
     ix.compact(spark)
     st = ix.stats()
     assert st["aborted_gens"] == [] and st["pending_gen"] is None
@@ -142,38 +154,6 @@ def test_ivf_append_crash_is_invisible_then_replays_once(spark, tmp_path):
     assert spark.read.parquet(s_path).count() == live == emb.count()
 
 
-def test_delete_heals_a_crashed_append_first(spark, tmp_path):
-    """A delete issued over a crashed-append store must abort the
-    orphans BEFORE bumping the committed horizon past them — otherwise
-    the orphan rows would surface as committed."""
-    from distributedvectordatabase_spark.sources.text_index import TextIndex
-
-    docs = load_table(spark, "documents", SF_SMALL)
-    d1 = docs.filter(F.col("doc_id") % 2 == 0)
-    d2 = docs.filter(F.col("doc_id") % 2 == 1)
-    terms = ["dup", "vector", "query"]
-
-    ix = TextIndex(str(tmp_path / "ix"), n_buckets=8)
-    ix.build(d1)
-    st_before = ix.stats()
-    ix.append(d2)
-    committed_gen = ix.stats()["gen"]
-    st_before["pending_gen"] = committed_gen
-    with open(os.path.join(str(tmp_path / "ix"), "_stats.json"), "w") as f:
-        json.dump(st_before, f)
-
-    victim = int(d1.first().doc_id)
-    ix.delete(spark, [victim])
-    st = ix.stats()
-    # the delete healed the orphan gen and took the NEXT number
-    assert st["aborted_gens"] == [committed_gen]
-    assert st["gen"] == committed_gen + 1
-
-    fresh = TextIndex(str(tmp_path / "f"), n_buckets=8)
-    fresh.build(d1.filter(F.col("doc_id") != victim))
-    assert _bm25(ix, spark, terms) == _bm25(fresh, spark, terms)
-
-
 def test_vector_store_append_crash_is_invisible_then_replays_once(spark, tmp_path):
     from distributedvectordatabase_spark.functions.lsh import SignLSH
     from distributedvectordatabase_spark.sources.vector_store import VectorStore
@@ -206,7 +186,7 @@ def test_vector_store_append_crash_is_invisible_then_replays_once(spark, tmp_pat
 
     # replay: heals + lands once
     store.append(batch)
-    cfg = store._lsh_config()
+    cfg = _sidecar(s_path, "_lsh.json")
     assert cfg["aborted_gens"] == [committed_gen]
     assert cfg["pending_gen"] is None and cfg["gen"] == committed_gen + 1
     assert store.read(spark).count() == emb.count()
@@ -215,7 +195,7 @@ def test_vector_store_append_crash_is_invisible_then_replays_once(spark, tmp_pat
 
     live = store.read(spark).count()
     store.compact(spark)
-    cfg = store._lsh_config()
+    cfg = _sidecar(s_path, "_lsh.json")
     assert cfg["aborted_gens"] == [] and cfg["pending_gen"] is None
     assert spark.read.parquet(s_path).count() == live
 
@@ -254,7 +234,7 @@ def test_sig_store_append_crash_is_invisible_then_replays_once(spark, tmp_path):
     assert sig.ingest_batch() == -1
 
     sig.append(c2, ingest_batch=1)
-    cfg = sig._config()
+    cfg = _sidecar(s_path, "_config.json")
     assert cfg["aborted_gens"] == [committed["gen"]]
     assert cfg["gen"] == committed["gen"] + 1 and cfg["ingest_batch"] == 1
     f2 = SigStore(str(tmp_path / "f2"), bands=4, rows=3, shingle_n=3)
@@ -262,7 +242,7 @@ def test_sig_store_append_crash_is_invisible_then_replays_once(spark, tmp_path):
     assert hits(sig) == hits(f2)
 
     sig.compact(spark)
-    cfg = sig._config()
+    cfg = _sidecar(s_path, "_config.json")
     assert cfg["aborted_gens"] == [] and cfg["pending_gen"] is None
     assert cfg["ingest_batch"] == 1  # marker survives compaction (r7)
     assert hits(sig) == hits(f2)
@@ -301,14 +281,14 @@ def test_tokenizer_store_append_crash_is_invisible_then_replays_once(spark, tmp_
 
     # replay folds once: equal to a fresh train over the union
     merges = tok.append(d2)
-    cfg = tok._config()
+    cfg = _sidecar(s_path, "_config.json")
     assert cfg["aborted_gens"] == [committed["gen"]]
     assert cfg["gen"] == committed["gen"] + 1 and cfg["pending_gen"] is None
     assert merges == bpe_train(docs, n_merges=8)
     assert tok.registered_docs(spark).count() == docs.count()
 
     tok.compact(spark)
-    cfg = tok._config()
+    cfg = _sidecar(s_path, "_config.json")
     assert cfg["aborted_gens"] == [] and cfg["pending_gen"] is None
     assert tok.merges(spark) == merges
 

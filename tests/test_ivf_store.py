@@ -403,7 +403,7 @@ def test_ivfsq_compact_carries_sidecar(spark, built_sq):
            for r in built_sq.knn_sq(spark, qs, k=5, n_probe=8, rerank=0).collect()}
     assert got == want
     assert spark.read.parquet(built_sq._sq_path).filter("vec_id = 0").count() == 0
-    assert not os.path.exists(built_sq._tombstone_path)
+    assert not os.path.exists(os.path.join(built_sq.path, "_tombstones"))
 
 
 # -- cell-balance audit + oversized-cell split (r6) --------------------------
@@ -623,7 +623,7 @@ def test_ivfbq_append_delete_compact_stay_in_sync(spark, built_bq):
            for r in built_bq.knn_bq(spark, qs, k=5, n_probe=8, rerank=4).collect()}
     assert got == want
     assert spark.read.parquet(built_bq._bq_path).filter("vec_id = 9001").count() == 0
-    assert not os.path.exists(built_bq._tombstone_path)
+    assert not os.path.exists(os.path.join(built_bq.path, "_tombstones"))
 
 
 def test_ivfbq_config_authoritative_and_normalized_domain(spark, tmp_path):

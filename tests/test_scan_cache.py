@@ -9,7 +9,9 @@ ever frozen."""
 from __future__ import annotations
 
 import os
+import time
 
+from distributedvectordatabase_spark.sources import scan_cache
 from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
 
 
@@ -53,4 +55,51 @@ def test_touch_only_invalidates(spark, tmp_path):
     )
     st = os.stat(f)
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert cached_parquet(spark, p) is not a
+
+
+def test_file_vanishing_mid_fingerprint_is_skipped(spark, tmp_path, monkeypatch):
+    # a concurrent compact/overwrite can remove a file between the
+    # directory walk and its stat: the fingerprint skips it instead of
+    # failing the read
+    p = str(tmp_path / "t")
+    spark.range(0, 5).coalesce(1).write.parquet(p)
+    spark.range(5, 10).coalesce(1).write.mode("append").parquet(p)
+    victim = sorted(
+        os.path.join(p, x) for x in os.listdir(p) if x.endswith(".parquet")
+    )[0]
+    real_stat = os.stat
+    deleted = []
+
+    def stat_after_delete(path, *a, **kw):
+        if path == victim and not deleted:
+            os.unlink(victim)
+            deleted.append(victim)
+        return real_stat(path, *a, **kw)
+
+    monkeypatch.setattr(scan_cache.os, "stat", stat_after_delete)
+    df = cached_parquet(spark, p)
+    monkeypatch.undo()
+    assert deleted and df.count() == 5
+
+
+def test_same_size_rewrite_with_restored_mtime_invalidates(spark, tmp_path):
+    # a rewrite that keeps the size and lands inside the mtime
+    # granularity (simulated by restoring the old mtime) must still key
+    # a fresh read: inode/ctime are part of the fingerprint
+    p = str(tmp_path / "t")
+    spark.range(10).write.parquet(p)
+    a = cached_parquet(spark, p)
+    f = next(
+        os.path.join(p, x) for x in os.listdir(p) if x.endswith(".parquet")
+    )
+    st = os.stat(f)
+    with open(f, "rb") as fh:
+        data = fh.read()
+    time.sleep(0.05)  # past the coarse clock tick that stamps ctime
+    with open(f, "r+b") as fh:
+        fh.write(data)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_size == st.st_size
+    assert os.stat(f).st_mtime_ns == st.st_mtime_ns
     assert cached_parquet(spark, p) is not a

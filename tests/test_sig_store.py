@@ -152,7 +152,7 @@ def test_compact_folds_tombstones(spark, tmp_path):
     s.compact(spark)
     # physically gone from both tables, tombstones dropped, results same
     import os
-    assert not os.path.exists(s._tombstone_path)
+    assert not os.path.exists(os.path.join(s.path, "_tombstones"))
     toks_ids = {r.doc_id for r in s.corpus_toks(spark).select("doc_id").collect()}
     band_ids = {r.doc_id for r in s.corpus_bands(spark).select("doc_id").collect()}
     assert not set(victim_ids) & (toks_ids | band_ids)

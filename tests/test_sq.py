@@ -191,13 +191,19 @@ def test_store_compact_carries_sq_sidecar_and_folds_tombstones(spark, sq_store):
     # tombstones folded physically out of the codes table too
     raw_codes = spark.read.parquet(sq_store._sq_path)
     assert raw_codes.filter("vec_id = 0").count() == 0
-    assert not os.path.exists(sq_store._tombstone_path)
+    assert not os.path.exists(os.path.join(sq_store.path, "_tombstones"))
 
 
 def test_store_knn_sq_detects_stale_codes(spark, sq_store):
     # simulate an out-of-band write (e.g. a streaming sink) bumping the
     # store generation without the codes sync
-    sq_store._write_lsh_config(gen=sq_store._gen() + 1)
+    import json
+
+    with open(sq_store._lsh_config_path) as f:
+        cfg = json.load(f)
+    cfg["gen"] += 1
+    with open(sq_store._lsh_config_path, "w") as f:
+        json.dump(cfg, f)
     q = queries_fixture(spark, SF_DIR, n=2)
     with pytest.raises(ValueError, match="stale"):
         sq_store.knn_sq(spark, q, k=2)

@@ -14,7 +14,11 @@ store joins the matrix by adding an adapter:
 - **delete + compact**: tombstoned rows vanish from the canonical
   query, compact() folds them physically (tombstone dir gone, results
   unchanged), and delete-then-append of the same ids is a well-defined
-  upsert.
+  upsert;
+- **crash heal**: a delete over a crashed append (sidecar rewound to
+  its pending intent) aborts the orphans before it bumps the committed
+  horizon — the shared tombstones.Generations path, asserted on the
+  five base stores.
 
 Store-SPECIFIC pins (bit-exact scores, plan shapes, sink-era guards,
 codes-sidecar sync) stay in their own modules — this matrix asserts
@@ -23,6 +27,7 @@ the shared lifecycle only.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -40,6 +45,7 @@ from tests.conftest import SF_SMALL
 
 class _VS:
     name = "vector_store"
+    sidecar = "_lsh.json"
 
     def corpus(self, spark):
         return load_table(spark, "embeddings", SF_SMALL)
@@ -74,12 +80,10 @@ class _VS:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 class _IVF:
     name = "ivf_store"
+    sidecar = "_centroids.json"
 
     def corpus(self, spark):
         return load_table(spark, "embeddings", SF_SMALL)
@@ -115,12 +119,10 @@ class _IVF:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 class _TIX:
     name = "text_index"
+    sidecar = "_stats.json"
     TERMS = ["dup", "vector", "query"]
 
     def corpus(self, spark):
@@ -155,12 +157,10 @@ class _TIX:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 class _SIG:
     name = "sig_store"
+    sidecar = "_config.json"
 
     def corpus(self, spark):
         # the corpus side only; the batch side is the canonical query
@@ -200,9 +200,6 @@ class _SIG:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 class _TOK:
     """TokenizerStore (r7): canon is the live corpus registration plus
@@ -213,6 +210,7 @@ class _TOK:
     doc_id -1-ord so ids_of (deletable doc ids) can filter them out."""
 
     name = "tokenizer_store"
+    sidecar = "_config.json"
 
     def corpus(self, spark):
         return load_table(spark, "documents", SF_SMALL).limit(160)
@@ -250,9 +248,6 @@ class _TOK:
 
     def compact(self, spark, store):
         store.compact(spark)
-
-    def tombstone_path(self, store):
-        return store._tombstone_path
 
 
 class _VS_SQF:
@@ -303,9 +298,6 @@ class _VS_SQF:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 class _IVF_SQF:
     """IVF twin of _VS_SQF: metadata co-located via build(meta_cols=),
@@ -352,11 +344,9 @@ class _IVF_SQF:
     def compact(self, spark, store):
         store.compact(spark)
 
-    def tombstone_path(self, store):
-        return store._tombstone_path
-
 
 ADAPTERS = [_VS(), _IVF(), _TIX(), _SIG(), _TOK(), _VS_SQF(), _IVF_SQF()]
+BASE_ADAPTERS = ADAPTERS[:5]
 
 
 @pytest.fixture(params=ADAPTERS, ids=[a.name for a in ADAPTERS])
@@ -409,7 +399,7 @@ def test_delete_compact_upsert_lifecycle(spark, tmp_path, adapter):
     assert not set(adapter.ids_of(after)) & set(victims)
 
     adapter.compact(spark, store)
-    assert not os.path.exists(adapter.tombstone_path(store))
+    assert not os.path.exists(os.path.join(store.path, "_tombstones"))
     assert adapter.canon(spark, store) == after
 
     # delete-then-append the victims back: a well-defined upsert (for
@@ -418,3 +408,43 @@ def test_delete_compact_upsert_lifecycle(spark, tmp_path, adapter):
     c = adapter.split_col()
     adapter.append(spark, store, df.filter(F.col(c).isin(victims)))
     assert adapter.canon(spark, store) == before
+
+
+@pytest.mark.parametrize(
+    "adapter", BASE_ADAPTERS, ids=[a.name for a in BASE_ADAPTERS]
+)
+def test_delete_heals_a_crashed_append_first(spark, tmp_path, adapter):
+    """A delete issued over a crashed-append store must abort the
+    orphans BEFORE bumping the committed horizon past them — otherwise
+    the orphan rows would surface as committed. The crash state is the
+    committed append with its sidecar rewound to the pre-commit form
+    (old gen and stats plus the ``pending_gen`` intent; IVF radii stay
+    widened, since append widens them before the data lands)."""
+    df = adapter.corpus(spark)
+    c = adapter.split_col()
+    lo, hi = df.filter(F.col(c) % 2 == 0), df.filter(F.col(c) % 2 == 1)
+    path = str(tmp_path / "s")
+    side_path = os.path.join(path, adapter.sidecar)
+    store = adapter.build(spark, path, lo)
+    with open(side_path) as f:
+        crashed = json.load(f)
+    adapter.append(spark, store, hi)
+    with open(side_path) as f:
+        committed = json.load(f)
+    committed_gen = committed["gen"]
+    crashed["pending_gen"] = committed_gen
+    if "radii" in committed:
+        crashed["radii"] = committed["radii"]
+    with open(side_path, "w") as f:
+        json.dump(crashed, f)
+
+    victim = adapter.ids_of(adapter.canon(spark, store))[0]
+    adapter.delete(spark, store, [victim])
+    with open(side_path) as f:
+        side = json.load(f)
+    # the delete healed the orphan gen and took the NEXT number
+    assert side["aborted_gens"] == [committed_gen]
+    assert side["gen"] == committed_gen + 1
+
+    fresh = adapter.build(spark, str(tmp_path / "f"), lo.filter(F.col(c) != victim))
+    assert adapter.canon(spark, store) == adapter.canon(spark, fresh)

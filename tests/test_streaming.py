@@ -548,6 +548,49 @@ def test_streamed_store_delete_and_sink_finalize_lifecycle(spark, tmp_path):
         )
 
 
+def test_streamed_rows_survive_a_delete_after_a_crashed_append(spark, tmp_path):
+    """The stream allocates its gen through the shared allocator: a
+    failed append's intent (``pending_gen``) must be healed into
+    ``aborted_gens`` BEFORE the stream picks its gen, or the stream's
+    rows would share the aborted number and the next delete — which
+    heals that intent — would hide every one of them."""
+    import json
+
+    from distributedvectordatabase_spark.functions.lsh import SignLSH
+    from distributedvectordatabase_spark.sources.vector_store import (
+        DimensionMismatchError,
+    )
+
+    store = VectorStore(str(tmp_path / "vstore"), SignLSH(dim=64))
+    # 1) an append that fails mid-write leaves the intent behind
+    bad = spark.createDataFrame(
+        [(100, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(DimensionMismatchError):
+        store.append(bad)
+    with open(os.path.join(store.path, "_lsh.json")) as f:
+        side = json.load(f)
+    assert side["gen"] == 0 and side["pending_gen"] == 1
+
+    # 2) the stream lands 10 rows
+    src = tmp_path / "vin"
+    src.mkdir()
+    emb = load_table(spark, "embeddings", SF_SMALL).filter(F.col("vec_id") < 10)
+    emb.coalesce(1).write.parquet(str(tmp_path / "stage"))
+    part = next(
+        p for p in (tmp_path / "stage").iterdir() if p.name.endswith(".parquet")
+    )
+    shutil.move(str(part), src / "f0.parquet")
+    q = stream_ingest_vectors(spark, str(src), store, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert store.read(spark).count() == 10
+
+    # 3) a delete heals the crashed intent and hides only its victim
+    store.delete(spark, [0])
+    assert store.read(spark).count() == 9
+
+
 def test_stream_text_index_ingest_matches_batch_fold(spark, tmp_path):
     """Streaming posting ingest (r6): after the stream drains, BM25
     over the streamed index must be byte-identical to a fresh build
@@ -692,13 +735,13 @@ def test_stream_ivf_ingest_matches_batch_append(spark, tmp_path):
         assert d <= radii[r.cell_id] + 1e-6
 
     # replay idempotency 1: same checkpoint -> no-op
-    gen_before = streamed._gen()
+    gen_before = streamed.current_gen()
     q = stream_ivf_ingest(
         spark, str(src), str(tmp_path / "ckpt"), s_path, max_files_per_trigger=1
     )
     q.awaitTermination(180)
     assert streamed.read(spark).count() == 500
-    assert streamed._gen() == gen_before
+    assert streamed.current_gen() == gen_before
 
     # replay idempotency 2: FRESH checkpoint redelivers batch ids 0..1,
     # but the committed-batch marker (batch_id=1, riding the same
@@ -710,7 +753,7 @@ def test_stream_ivf_ingest_matches_batch_append(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert streamed.read(spark).count() == 500
-    assert streamed._gen() == gen_before
+    assert streamed.current_gen() == gen_before
 
 
 def test_stream_tokenizer_ingest_matches_fresh_train(spark, tmp_path):

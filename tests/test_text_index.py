@@ -210,7 +210,7 @@ def test_compact_folds_tombstones(spark, tmp_path):
     ix.delete(spark, victims)
     want = _scores(ix.bm25(spark, TERMS, k=10).collect())
     ix.compact(spark)
-    assert not os.path.exists(ix._tombstone_path)
+    assert not os.path.exists(os.path.join(ix.path, "_tombstones"))
     left = {r.doc_id for r in ix.postings(spark).select("doc_id").collect()}
     assert not set(victims) & left
     got = _scores(ix.bm25(spark, TERMS, k=10).collect())
